@@ -356,11 +356,15 @@ def txn_split(ev: DataFrame, prev: DataFrame | None
     (the Kafka swap-in ``stream_apply_debezium`` documents) a redelivered
     event must not inflate the completeness count — ``count(*)`` would
     declare a transaction complete before all DISTINCT events arrived
-    and apply it torn. ``countDistinct(_txn_order)`` counts each
-    position once no matter how often it is redelivered. Envelopes whose
-    transaction block lacks ``total_order`` (all-null orders for a txn)
-    fall back to the raw count — the best decidable criterion for that
-    wire dialect, correct under exactly-once transports.
+    and apply it torn. The position count is the number of DISTINCT
+    ``_txn_order`` values plus the number of events with a null
+    ``_txn_order``: each known position counts once no matter how often
+    it is redelivered, and an event without a position (a wire dialect
+    that omits ``total_order``, wholly or for some events) counts as
+    itself — the best decidable criterion there, correct under
+    exactly-once transports. A transaction whose total is unknown (no
+    ``event_count``, as in Debezium's own data events) is never complete:
+    it waits in the incomplete side rather than vanishing from both.
 
     The carried-over pending side is deduplicated on
     ``(_txn_id, _txn_order)`` so redelivery cannot grow the pending
@@ -387,12 +391,11 @@ def txn_split(ev: DataFrame, prev: DataFrame | None
         F.concat(F.lit("~"),
                  F.xxhash64("lsn", "conv_id", "turn_idx").cast("string")))
     w = Window.partitionBy(key)
-    n_pos = F.size(F.array_distinct(
-        F.collect_list("_txn_order").over(w)))
-    n_all = F.count(F.lit(1)).over(w)
+    n_pos = (F.size(F.array_distinct(F.collect_list("_txn_order").over(w)))
+             + F.count(F.lit(1)).over(w) - F.count("_txn_order").over(w))
     tot = F.max("_txn_total").over(w)
     done = (F.col("_txn_id").isNull()
-            | F.when(n_pos > 0, n_pos >= tot).otherwise(n_all >= tot))
+            | F.coalesce(n_pos >= tot, F.lit(False)))
     tagged = ev.withColumn("_done", done)
     complete = tagged.filter("_done").drop("_done")
     # dedup only rows that HAVE a position: null orders (the count-based
@@ -418,6 +421,107 @@ def pending_txn_schema() -> T.StructType:
            T.StructField("_txn_total", T.LongType(), True)])
 
 
+class PendingStore:
+    """Pending-transaction states of a transactional applier: one
+    ``pending-%09d`` dir per batch id holding the events of transactions
+    still incomplete after that batch, published by stage + ``_DONE`` +
+    rename and ordered by integer id. Only the newest two are kept: a
+    replayed batch reads the newest state strictly below its own id."""
+
+    KEEP = 2
+
+    def __init__(self, spark: SparkSession, state_dir: str) -> None:
+        self.spark = spark
+        self.dir = state_dir
+        os.makedirs(state_dir, exist_ok=True)
+
+    def _published(self) -> list[tuple[int, str]]:
+        """(id, dir name) of every published state, ascending by id."""
+        return sorted(
+            (int(d.split("-", 1)[1]), d) for d in os.listdir(self.dir)
+            if d.startswith("pending-") and "." not in d
+            and os.path.exists(os.path.join(self.dir, d, "_DONE")))
+
+    def _read(self, name: str) -> DataFrame:
+        return self.spark.read.schema(pending_txn_schema()).parquet(
+            os.path.join(self.dir, name))
+
+    def read_before(self, batch_id: int) -> DataFrame | None:
+        """The newest published state with id < ``batch_id``, or None."""
+        prior = [name for i, name in self._published() if i < batch_id]
+        return self._read(prior[-1]) if prior else None
+
+    def newest(self) -> DataFrame | None:
+        """The newest published state, or None."""
+        return self.read_before(float("inf"))
+
+    def published_from(self, batch_id: int) -> bool:
+        """Whether a state with id >= ``batch_id`` is published."""
+        return any(i >= batch_id for i, _ in self._published())
+
+    def publish(self, batch_id: int, incomplete: DataFrame) -> None:
+        """Publish (or re-publish) ``batch_id``'s state, then prune."""
+        import shutil
+
+        final = os.path.join(self.dir, f"pending-{batch_id:09d}")
+        stage = f"{final}.stage-{os.getpid()}"
+        incomplete.write.mode("overwrite").parquet(stage)
+        with open(os.path.join(stage, "_DONE"), "w") as fh:
+            fh.write("ok")
+        if os.path.isdir(final):
+            shutil.rmtree(final, ignore_errors=True)
+        os.rename(stage, final)
+        for _, name in self._published()[:-self.KEEP]:
+            shutil.rmtree(os.path.join(self.dir, name), ignore_errors=True)
+
+
+def apply_txn_batch(step: Any, store: PendingStore, batch_id: int,
+                    ev: DataFrame) -> None:
+    """One transaction-aware batch through ``runner.ApplyStep``: split
+    (``ev`` + the newest pending state below ``batch_id``), apply the
+    complete side, then publish the incomplete side as ``batch_id``'s
+    pending state (a crash in between replays the identical split into a
+    fenced no-op). ``ev`` is persisted: the apply and the pending write
+    would each re-run the JSON parse (measured 4.06x the plain ingest at
+    bench scale without the persist, ~1x with it)."""
+    ev = ev.persist()
+    try:
+        complete, incomplete = txn_split(ev, store.read_before(batch_id))
+        step.apply(batch_id, complete.drop("_txn_id", "_txn_order",
+                                           "_txn_total"),
+                   publish=lambda: store.publish(batch_id, incomplete))
+    finally:
+        ev.unpersist()
+
+
+def _ndjson_batches(ndjson_dir: str) -> list[tuple[int, str]]:
+    """(batch id, path) of each envelope file, in name order. The id is
+    the name's trailing digits when present (``batch-00003.ndjson``),
+    else the file's sorted position — both stable across re-runs, which
+    is all fencing needs."""
+    files = sorted(f for f in os.listdir(ndjson_dir)
+                   if not f.startswith((".", "_"))
+                   and not f.endswith((".crc", ".tmp")))
+    out = []
+    for pos, f in enumerate(files):
+        digits = f.rsplit(".", 1)[0].rsplit("-", 1)[-1]
+        out.append((int(digits) if digits.isdigit() else pos,
+                    os.path.join(ndjson_dir, f)))
+    return out
+
+
+def _envelope_step(spark: SparkSession, table_path: str, n_buckets: int,
+                   quarantine_dir: str | None, salted: bool = False) -> Any:
+    """The MOR ``ApplyStep`` of an envelope ingester."""
+    from .runner import ApplyStep
+
+    step = ApplyStep(spark, table_path, n_buckets=n_buckets, mode="mor",
+                     salted=salted)
+    if quarantine_dir is not None:
+        step.quarantine_dir = quarantine_dir
+    return step
+
+
 def ingest_debezium_txn(
     spark: SparkSession, ndjson_dir: str, table_path: str,
     n_buckets: int = 8, state_dir: str | None = None,
@@ -431,13 +535,15 @@ def ingest_debezium_txn(
     ``event_count`` on every data event) makes completeness decidable:
     a transaction is complete in the accumulated stream once all
     ``event_count`` of its events have arrived. Per NDJSON file (= one
-    fenced micro-batch): union the file's events with the carried-over
+    fenced micro-batch, through ``apply_txn_batch`` and the shared
+    ``ApplyStep``): union the file's events with the carried-over
     incomplete-transaction events, split complete (all counted, plus
     events outside any transaction) from incomplete, apply the complete
-    set through the ordinary fenced merge, then atomically publish the
-    new pending state as ``pending-<pos>``. Readers at ANY snapshot see
-    only whole transactions — the guarantee a downstream consumer needs
-    to join tables consistently off a one-topic stream.
+    set through the ordinary fenced merge, then publish the new pending
+    state to the ``PendingStore`` in ``state_dir`` (default
+    ``<table_path>/_txn_pending``). Readers at ANY snapshot see only
+    whole transactions — the guarantee a downstream consumer needs to
+    join tables consistently off a one-topic stream.
 
     Crash-safe by determinism: the split is a pure function of
     ``(newest published pending with id < batch_id, file)``, both
@@ -449,84 +555,35 @@ def ingest_debezium_txn(
     shift but batch ids do not, so the first remaining file still finds
     the carried-over incomplete-transaction events published by its
     predecessor (the streaming variant's epoch discipline).
-    ``pending-<batch_id>``'s ``_DONE`` marker is the batch's completion
-    record; resume skips batches whose apply is committed AND whose
-    pending state is published. Deferral is safe under LWW: a deferred
-    event applies later at its original LSN, and max-LSN resolution is
-    order-independent.
+
+    Resume: a batch is skipped when it is committed AND a pending state
+    at or above its id is published; anything else replays. Retention:
+    the store keeps the newest two states, so the pending state stays
+    bounded however many files the directory holds — the resume rule
+    reads "at or above", not "exactly this id", so pruning an old
+    batch's state never makes it replay. Deferral is safe under LWW: a
+    deferred event applies later at its original LSN, and max-LSN
+    resolution is order-independent.
 
     Quarantine: defaults to ``<table_path>/_quarantine`` (matching
     ``stream_apply``) so a poisoned envelope always leaves a row-level
-    record; pass ``quarantine_dir=False``-y via an explicit empty string
-    only if you genuinely want counter-only accounting.
+    record.
 
     Scale: the pending set is bounded by in-flight transactions (the
     tail of the current batch), not history; the completeness check is
-    one groupBy on ``_txn_id`` over ``O(batch + pending)`` rows.
+    one window over ``_txn_id`` (one shuffle) on ``O(batch + pending)``
+    rows. Layers fold like every other path's (``compact_every=8``).
     """
-    from .merge import mor_apply_batch
-
-    table = CowTable(table_path, n_buckets=n_buckets)
-    table.create()
-    if quarantine_dir is None:
-        quarantine_dir = os.path.join(table_path, "_quarantine")
-    state_dir = state_dir or os.path.join(table_path, "_txn_pending")
-    os.makedirs(state_dir, exist_ok=True)
-    txn_cols = ["_txn_id", "_txn_order", "_txn_total"]
-    pending_schema = pending_txn_schema()
-    files = sorted(f for f in os.listdir(ndjson_dir)
-                   if not f.startswith((".", "_"))
-                   and not f.endswith((".crc", ".tmp")))
-
-    def _pending_path(bid: int) -> str:
-        return os.path.join(state_dir, f"pending-{bid:09d}")
-
-    def _done_pending_ids() -> list[int]:
-        return sorted(
-            int(d.split("-")[1]) for d in os.listdir(state_dir)
-            if d.startswith("pending-") and "." not in d
-            and os.path.exists(os.path.join(state_dir, d, "_DONE")))
-
-    def _read_pending_before(bid: int) -> DataFrame | None:
-        prior = [i for i in _done_pending_ids() if i < bid]
-        if not prior:
-            return None
-        return spark.read.schema(pending_schema).parquet(
-            _pending_path(prior[-1]))
-
-    for pos, f in enumerate(files):
-        stem = f.rsplit(".", 1)[0]
-        digits = stem.rsplit("-", 1)[-1]
-        batch_id = int(digits) if digits.isdigit() else pos
-        if table.is_committed(batch_id) and os.path.exists(
-                os.path.join(_pending_path(batch_id), "_DONE")):
+    step = _envelope_step(spark, table_path, n_buckets, quarantine_dir)
+    store = PendingStore(spark, state_dir
+                         or os.path.join(table_path, "_txn_pending"))
+    for batch_id, path in _ndjson_batches(ndjson_dir):
+        if step.table.is_committed(batch_id) and store.published_from(
+                batch_id):
             continue
-        # persist the parsed batch: the split's consumers (completeness
-        # agg, the two semi/anti joins, the apply, the pending write) are
-        # FOUR separate actions — without the persist each re-runs the
-        # Jackson parse over the whole file (measured 4.06x the plain
-        # ingest at bench scale; ~1x with it). O(batch) rows, freed below.
-        ev = parse_debezium(spark.read.text(os.path.join(ndjson_dir, f)),
-                            with_transaction=True).persist()
-        try:
-            complete, incomplete = txn_split(ev, _read_pending_before(batch_id))
-            mor_apply_batch(spark, table, complete.drop(*txn_cols), batch_id,
-                            quarantine_dir=quarantine_dir)
-            table.refresh()
-            # publish pending AFTER the fenced apply: a crash in between
-            # replays the identical deterministic split into a fenced no-op
-            stage = _pending_path(batch_id) + f".stage-{os.getpid()}"
-            incomplete.write.mode("overwrite").parquet(stage)
-        finally:
-            ev.unpersist()
-        with open(os.path.join(stage, "_DONE"), "w") as fh:
-            fh.write("ok")
-        final = _pending_path(batch_id)
-        if os.path.isdir(final):
-            import shutil as _sh
-            _sh.rmtree(final, ignore_errors=True)
-        os.rename(stage, final)
-    return table
+        apply_txn_batch(step, store, batch_id, parse_debezium(
+            spark.read.text(path), with_transaction=True))
+    return step.table
 
 
 def relay_debezium(
@@ -795,34 +852,17 @@ def ingest_debezium(
     ``batch_id``, so re-running over the same directory (resume after a
     crash, an operator double-invoke) re-applies nothing — the same
     idempotence contract as the parquet runner, reached through the same
-    ``mor_apply_batch`` path (LWW reduce -> bucket-partitioned delta
-    layer -> CAS commit).
+    ``ApplyStep`` (LWW reduce -> bucket-partitioned delta layer -> CAS
+    commit -> lineage, and the runner's fold policy at its default
+    ``compact_every=8``).
 
     Quarantine defaults to ``<table_path>/_quarantine`` so a poisoned
     envelope always leaves a row-level record (the module's
     never-silently-dropped contract), not just a metrics counter.
     """
-    from .merge import mor_apply_batch
-
-    table = CowTable(table_path, n_buckets=n_buckets)
-    table.create()
-    if quarantine_dir is None:
-        quarantine_dir = os.path.join(table_path, "_quarantine")
-    files = sorted(f for f in os.listdir(ndjson_dir)
-                   if not f.startswith((".", "_"))
-                   and not f.endswith((".crc", ".tmp")))
-    for pos, f in enumerate(files):
-        # batch id from the filename's trailing digits when present
-        # (batch-00003.ndjson), else the file's sorted position — both
-        # stable across re-runs, which is all fencing needs
-        stem = f.rsplit(".", 1)[0]
-        digits = stem.rsplit("-", 1)[-1]
-        batch_id = int(digits) if digits.isdigit() else pos
-        if table.is_committed(batch_id):
-            continue
-        lines = spark.read.text(os.path.join(ndjson_dir, f))
-        events = parse_debezium(lines, value_col="value")
-        mor_apply_batch(spark, table, events, batch_id, salted=salted,
-                        quarantine_dir=quarantine_dir)
-        table.refresh()
-    return table
+    step = _envelope_step(spark, table_path, n_buckets, quarantine_dir,
+                          salted=salted)
+    for batch_id, path in _ndjson_batches(ndjson_dir):
+        if not step.table.is_committed(batch_id):
+            step.apply(batch_id, parse_debezium(spark.read.text(path)))
+    return step.table

@@ -10,8 +10,13 @@ Each iteration:
    ``schema_id=K/batch_id=N`` directory is listed/scanned;
 3. the epoch's physical schema is aligned to the target schema
    (schema evolution, metadata-only);
-4. merge_batch LWW-reduces, COW-merges the affected buckets, commits one
-   snapshot, and appends per-partition lineage.
+4. ``ApplyStep`` stages the batch (LWW reduce; MOR writes a delta layer,
+   COW merges the affected buckets), commits one snapshot under the
+   commit-retry policy, and runs the post-commit hooks: per-partition
+   lineage, derived-table maintainers and the fold policy.
+
+The streaming ``foreachBatch`` bodies and the envelope ingesters run the
+same ``ApplyStep`` with their own fenced batch ids.
 
 Crash anywhere before the snapshot rename leaves only an unreferenced
 staging dir; restart re-derives pending work from the checkpoint and
@@ -32,7 +37,6 @@ from .merge import (
     compact,
     compact_layers,
     merge_batch,
-    mor_apply_batch,
     mor_commit_staged,
     mor_stage_batch,
 )
@@ -167,11 +171,22 @@ class RunResult:
     rows_deleted: int = 0
 
 
-class CdcRunner:
+class ApplyStep:
+    """The per-batch apply every ingest path runs: stage -> commit under
+    ``_retry_commit`` -> post-commit hooks (lineage, a transactional
+    path's pending publish, the maintainer cadence, the fold policy).
+    ``CdcRunner`` drives it from the change-log checkpoint; the streaming
+    ``foreachBatch`` bodies and the envelope ingesters drive it with
+    their own fenced batch ids.
+
+    mode='cow': read-optimized, each batch rewrites affected buckets.
+    mode='mor': write-optimized (Iceberg-v2-style merge-on-read), each
+    batch appends an O(delta) layer; a bucket's layers fold once it
+    accumulates ``compact_every`` of them."""
+
     def __init__(
         self,
         spark: SparkSession,
-        log_dir: str,
         table_root: str,
         n_buckets: int = 16,
         salted: bool = False,
@@ -181,7 +196,6 @@ class CdcRunner:
         plan: str = "aligned",
         shuffle_salts: int = 4,
         async_lineage: bool = False,
-        pipeline_depth: int = 1,
         max_records_per_file: int = 0,
         audit: Any = None,
         commit_retries: int = 3,
@@ -193,22 +207,9 @@ class CdcRunner:
         maintain_every: int = 1,
         async_maintain: bool = False,
     ) -> None:
-        """mode='cow': read-optimized, each batch rewrites affected buckets.
-        mode='mor': write-optimized (Iceberg-v2-style merge-on-read), each
-        batch appends an O(delta) layer; layers fold into the base whenever
-        any bucket accumulates ``compact_every`` of them.
-
-        ``pipeline_depth`` > 1 (MOR only) overlaps micro-batches the way a
-        streaming engine does: up to that many batches' wide Spark jobs are
-        in flight at once (distinct MOR layers are write-independent), while
-        snapshot COMMITS stay strictly in batch order — so exactly-once
-        fencing and the checkpoint contract are unchanged. This fills the
-        scheduler gaps between jobs (driver-side planning, commit fsyncs)
-        with the next batch's executor work."""
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         self.spark = spark
-        self.log_dir = log_dir
         self.table = CowTable(table_root, n_buckets=n_buckets)
         self.table.create()
         self.salted = salted
@@ -222,20 +223,11 @@ class CdcRunner:
         # run() drains the executor before returning
         self.async_lineage = async_lineage
         self._lineage_pool = None
-        if pipeline_depth > 1 and mode != "mor":
-            raise ValueError("pipeline_depth > 1 requires mode='mor' "
-                             "(COW batches read the previous batch's output)")
         # write-audit-publish: audit(spark, table) -> bool | (bool, reason)
         # runs against table.read(spark, snapshot_id="staged") after each
         # batch's STAGED commit; True publishes (fencing engages then),
-        # False aborts — the batch stays pending for remediation. An audit
-        # gate serializes commits by construction, so it is incompatible
-        # with pipelined staging.
-        if audit is not None and pipeline_depth > 1:
-            raise ValueError("audit gating requires pipeline_depth=1 "
-                             "(publish/abort must interleave with commits)")
+        # False aborts — the batch stays pending for remediation.
         self.audit = audit
-        self.pipeline_depth = pipeline_depth
         # optimistic-concurrency loser policy: on ConcurrentCommitError the
         # runner refresh()es its table handle and re-runs the commit (up to
         # this many times) instead of surfacing the race to the caller —
@@ -311,12 +303,15 @@ class CdcRunner:
         self.maintenance_refreshes = 0  # observability: refresh rounds run
         # O7 shard sizing: cap rows per written data file (0 = uncapped)
         self.max_records_per_file = max_records_per_file
-        self.registry = SchemaRegistry()
         self.lineage_dir = os.path.join(table_root, "_lineage")
         self.quarantine_dir = os.path.join(table_root, "_quarantine")
 
-    def pending(self) -> list[int]:
-        return pending_batches(self.spark, self.log_dir, self.table)
+    @property
+    def _plan_kw(self) -> dict[str, Any]:
+        """The merge-plan options every stage, merge and DML call takes."""
+        return dict(salted=self.salted, n_salts=self.n_salts, plan=self.plan,
+                    shuffle_salts=self.shuffle_salts,
+                    max_records_per_file=self.max_records_per_file)
 
     def _retry_commit(self, fn: Any) -> Any:
         """Run ``fn`` (a closure ending in a snapshot commit); on
@@ -336,169 +331,104 @@ class CdcRunner:
                 self.commit_races_retried += 1
                 self.table.refresh()
 
-    def run(self, max_batches: int | None = None) -> RunResult:
-        if self.async_lineage and self._lineage_pool is None:
-            from concurrent.futures import ThreadPoolExecutor
+    # --- the apply step ----------------------------------------------------
 
-            self._lineage_pool = _TrackedPool(ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="lineage"
-            ))
-        schema_of = dict(planned_batches(self.log_dir))
-        result = RunResult()
-        if self.pipeline_depth > 1 and self.mode == "mor":
-            self._run_pipelined(schema_of, result, max_batches)
-            self.drain_maintenance()
-            self.drain_derived()
-            if self._lineage_pool is not None:
-                self._lineage_pool.drain()
-                self._lineage_pool = None
-            return result
-        for batch_id in self.pending():
-            if max_batches is not None and len(result.batches_applied) >= max_batches:
-                break
-            changes = read_batch(
-                self.spark, self.log_dir, batch_id, schema_of[batch_id], self.registry
-            )
-            if self.mode == "mor" and self.audit is None:
-                # stage/commit split so a lost commit race (e.g. to an
-                # async compaction) retries the METADATA only — the staged
-                # delta layer is parent-independent, no wide-job re-run
-                staged = mor_stage_batch(
-                    self.spark, self.table, changes, batch_id,
-                    salted=self.salted, n_salts=self.n_salts, plan=self.plan,
-                    shuffle_salts=self.shuffle_salts,
-                    quarantine_dir=self.quarantine_dir,
-                    max_records_per_file=self.max_records_per_file,
-                )
-                snap = None if staged is None else self._retry_commit(
-                    lambda: mor_commit_staged(
-                        self.spark, self.table, staged,
-                        lineage_dir=self.lineage_dir,
-                        lineage_executor=self._lineage_pool,
-                    ))
-            else:
-                apply_fn = merge_batch if self.mode == "cow" else mor_apply_batch
-                snap = self._retry_commit(lambda: apply_fn(
-                    self.spark,
-                    self.table,
-                    changes,
-                    batch_id,
-                    salted=self.salted,
-                    n_salts=self.n_salts,
-                    lineage_dir=self.lineage_dir,
-                    plan=self.plan,
-                    shuffle_salts=self.shuffle_salts,
-                    lineage_executor=self._lineage_pool,
-                    quarantine_dir=self.quarantine_dir,
-                    max_records_per_file=self.max_records_per_file,
-                    wap=self.audit is not None,
-                ))
-            if self.audit is not None and snap is not None:
-                verdict = self.audit(self.spark, self.table)
-                ok, reason = (verdict if isinstance(verdict, tuple)
-                              else (bool(verdict), ""))
-                if not ok:
-                    self.table.abort_staged()
-                    result.batches_rejected.append(batch_id)
-                    result.reject_reasons.append(reason)
-                    continue
-                # NOT retried on ConcurrentCommitError: a staged snapshot
-                # froze its parent + carried-forward dirs at stage time, so
-                # re-publishing after another writer's commit would drop
-                # that writer's buckets (lost update). Audit-gated ingest is
-                # single-writer by contract — surface the race instead.
-                pub = self.table.publish_staged()
-                rows = snap.get("_lineage_rows")
-                if rows:
-                    if self._lineage_pool is not None:
-                        self._lineage_pool.submit(
-                            append_lineage, self.lineage_dir, rows,
-                            snapshot_id=pub["snapshot_id"])
-                    else:
-                        append_lineage(self.lineage_dir, rows,
-                                       snapshot_id=pub["snapshot_id"])
-                snap = pub
-            if self.mode == "mor":
-                self._maybe_compact()
+    def stage(self, batch_id: int, changes: DataFrame) -> Any:
+        """Spark-side half of an apply. MOR writes the LWW-reduced delta
+        layer to an uncommitted dir (None when the batch is already
+        committed): the layer is parent-independent, so it may be staged
+        ahead of earlier batches' commits, and a lost commit race retries
+        the metadata only. COW has no such half — its merge reads the
+        affected buckets as of the commit — so the changes pass through
+        to ``commit`` unchanged."""
+        if self.mode == "cow":
+            return changes
+        return mor_stage_batch(self.spark, self.table, changes, batch_id,
+                               quarantine_dir=self.quarantine_dir,
+                               **self._plan_kw)
+
+    def _commit(self, batch_id: int, staged: Any,
+                wap: bool) -> dict[str, Any] | None:
+        """Commit a staged batch under ``_retry_commit`` (staged for audit
+        when ``wap``); None when it was already committed."""
+        if staged is None:
+            return None
+        if self.mode == "cow":
+            return self._retry_commit(lambda: merge_batch(
+                self.spark, self.table, staged, batch_id,
+                lineage_dir=self.lineage_dir,
+                lineage_executor=self._lineage_pool,
+                quarantine_dir=self.quarantine_dir, wap=wap, **self._plan_kw))
+        return self._retry_commit(lambda: mor_commit_staged(
+            self.spark, self.table, staged, lineage_dir=self.lineage_dir,
+            lineage_executor=self._lineage_pool, wap=wap))
+
+    def commit(self, batch_id: int, staged: Any, result: RunResult,
+               publish: Any = None) -> dict[str, Any] | None:
+        """Commit head of one batch: the commit (through the audit gate
+        when one is set), then the hooks — ``publish`` (run even after a
+        fenced no-op, so a replay re-publishes), the fold policy and the
+        maintainers. An inline fold runs before the maintainers, which so
+        see the folded table; an async fold is submitted after them, so
+        it never runs alongside this batch's maintainer refresh. Returns
+        the snapshot, or None when the batch was already committed or the
+        audit rejected it."""
+        snap = self._commit(batch_id, staged, wap=self.audit is not None)
+        if snap is not None and self.audit is not None:
+            snap = self._audit_publish(batch_id, snap, result)
             if snap is None:
-                result.batches_skipped.append(batch_id)
-            else:
-                result.batches_applied.append(batch_id)
-                result.rows_upserted += snap["summary"].get("rows_upserted", 0)
-                result.rows_deleted += snap["summary"].get("rows_deleted", 0)
-                self._maybe_maintain()
-        self.drain_maintenance()
-        self.drain_derived()
-        if self._lineage_pool is not None:
-            self._lineage_pool.drain()
-            self._lineage_pool = None
-        return result
-
-    def _run_pipelined(
-        self, schema_of: dict[int, int], result: RunResult,
-        max_batches: int | None,
-    ) -> None:
-        """MOR apply with up to ``pipeline_depth`` batches' Spark jobs in
-        flight. Staging (read -> align -> reduce -> layer write) fans out on
-        a thread pool — Spark job submission is thread-safe and the staged
-        layers land in distinct uncommitted dirs — while the main thread
-        commits strictly in batch order, preserving the snapshot chain."""
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        pending = self.pending()
-        if max_batches is not None:
-            pending = pending[:max_batches]
-
-        def _stage(batch_id: int) -> dict[str, Any] | None:
-            # one scheduler pool per pipeline slot: with FAIR mode (set in
-            # session.py) the in-flight batches' jobs share executor slots
-            # instead of queueing FIFO — batch k+1's map stage runs inside
-            # batch k's reduce stragglers and commit gaps
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"stage-{batch_id % self.pipeline_depth}"
-            )
-            changes = read_batch(self.spark, self.log_dir, batch_id,
-                                 schema_of[batch_id], self.registry)
-            return mor_stage_batch(
-                self.spark, self.table, changes, batch_id,
-                salted=self.salted, n_salts=self.n_salts, plan=self.plan,
-                shuffle_salts=self.shuffle_salts,
-                quarantine_dir=self.quarantine_dir,
-                max_records_per_file=self.max_records_per_file,
-            )
-
-        def _commit_head(window: Any) -> None:
-            batch_id, fut = window.popleft()
-            staged = fut.result()  # re-raises staging failures in order
-            # commit-only retry: a staged MOR layer is parent-independent,
-            # so the loser's retry is metadata-only (commit_delta re-reads
-            # the refreshed current snapshot and merges delta_dirs into it)
-            snap = None if staged is None else self._retry_commit(
-                lambda: mor_commit_staged(
-                    self.spark, self.table, staged,
-                    lineage_dir=self.lineage_dir,
-                    lineage_executor=self._lineage_pool,
-                ))
-            if snap is None:
-                result.batches_skipped.append(batch_id)
-            else:
-                result.batches_applied.append(batch_id)
-                result.rows_upserted += snap["summary"].get("rows_upserted", 0)
-                result.rows_deleted += snap["summary"].get("rows_deleted", 0)
-                self._maybe_maintain()
+                return None  # rejected: stays pending for remediation
+        if publish is not None:
+            publish()
+        if self.mode == "mor" and not self.async_compact:
             self._maybe_compact()
+        if snap is None:
+            result.batches_skipped.append(batch_id)
+        else:
+            result.batches_applied.append(batch_id)
+            result.rows_upserted += snap["summary"].get("rows_upserted", 0)
+            result.rows_deleted += snap["summary"].get("rows_deleted", 0)
+            self._maybe_maintain()
+        if self.mode == "mor" and self.async_compact:
+            self._maybe_compact()
+        return snap
 
-        with ThreadPoolExecutor(
-            max_workers=self.pipeline_depth, thread_name_prefix="mor-stage"
-        ) as pool:
-            window: deque = deque()
-            for batch_id in pending:
-                window.append((batch_id, pool.submit(_stage, batch_id)))
-                if len(window) >= self.pipeline_depth:
-                    _commit_head(window)
-            while window:
-                _commit_head(window)
+    def apply(self, batch_id: int, changes: DataFrame,
+              publish: Any = None) -> dict[str, Any] | None:
+        """Stage and commit one batch on the caller's thread."""
+        return self.commit(batch_id, self.stage(batch_id, changes),
+                           RunResult(), publish)
+
+    def _audit_publish(self, batch_id: int, snap: dict[str, Any],
+                       result: RunResult) -> dict[str, Any] | None:
+        """Write-audit-publish gate over a STAGED commit: a pass publishes
+        it and emits its deferred lineage; a fail aborts it (None)."""
+        verdict = self.audit(self.spark, self.table)
+        ok, reason = (verdict if isinstance(verdict, tuple)
+                      else (bool(verdict), ""))
+        if not ok:
+            self.table.abort_staged()
+            result.batches_rejected.append(batch_id)
+            result.reject_reasons.append(reason)
+            return None
+        # NOT retried on ConcurrentCommitError: a staged snapshot froze its
+        # parent + carried-forward dirs at stage time, so re-publishing
+        # after another writer's commit would drop that writer's buckets
+        # (lost update). Audit-gated ingest is single-writer by contract —
+        # surface the race instead.
+        pub = self.table.publish_staged()
+        rows = snap.get("_lineage_rows")
+        if rows:
+            if self._lineage_pool is not None:
+                self._lineage_pool.submit(
+                    append_lineage, self.lineage_dir, rows,
+                    snapshot_id=pub["snapshot_id"])
+            else:
+                append_lineage(self.lineage_dir, rows,
+                               snapshot_id=pub["snapshot_id"])
+        return pub
+
+    # --- fold policy --------------------------------------------------------
 
     def _run_fold(self, table: CowTable, buckets: list[int]) -> None:
         """One threshold fold under the configured strategy. ``compact``
@@ -528,19 +458,20 @@ class CdcRunner:
             # (otherwise every subsequent commit re-submits redundant
             # folds for buckets that are already clean)
             self.table.refresh()
-        if self.table.max_delta_layers() < self.compact_every:
+        if not self.async_compact:
+            self._fold_at_threshold()
             return
         buckets = self._buckets_at_threshold()
-        if not buckets:
-            return
-        if not self.async_compact:
-            if self._retry_commit(
-                    lambda: self._run_fold(self.table, buckets)) is not None:
-                self.compactions_run += 1
-            return
-        if self._maint_slot.busy:
+        if not buckets or self._maint_slot.busy:
             return  # one maintenance job at a time; catch up next commit
         self._maint_slot.submit(self._compact_async, buckets)
+
+    def _fold_at_threshold(self) -> None:
+        """Fold the at-threshold buckets inline on the caller's thread."""
+        buckets = self._buckets_at_threshold()
+        if buckets and self._retry_commit(
+                lambda: self._run_fold(self.table, buckets)) is not None:
+            self.compactions_run += 1
 
     def _compact_async(self, buckets: list[int]) -> None:
         # own handle: CowTable caches are not thread-safe, and the apply
@@ -559,18 +490,11 @@ class CdcRunner:
         fold any buckets still at threshold (layers that accrued while the
         last fold was in flight) so the end state honors the bounded-layer
         invariant the threshold promises."""
-        if not self._maint_slot.busy:
-            self._maint_slot.drain()  # stop the idle thread, if created
-            return
-        self._maint_slot.drain()
-        self.table.refresh()
-        buckets = (self._buckets_at_threshold()
-                   if self.table.max_delta_layers() >= self.compact_every
-                   else [])
-        if buckets:
-            if self._retry_commit(
-                    lambda: self._run_fold(self.table, buckets)) is not None:
-                self.compactions_run += 1
+        busy = self._maint_slot.busy
+        self._maint_slot.drain()  # also stops an idle thread, if created
+        if busy:
+            self.table.refresh()
+            self._fold_at_threshold()
 
     # --- derived-table maintenance ---------------------------------------
 
@@ -634,6 +558,118 @@ class CdcRunner:
             if len(ds) >= self.compact_every
         )
 
+
+class CdcRunner(ApplyStep):
+    def __init__(
+        self,
+        spark: SparkSession,
+        log_dir: str,
+        table_root: str,
+        n_buckets: int = 16,
+        pipeline_depth: int = 1,
+        **options: Any,
+    ) -> None:
+        """Tails the change log under ``log_dir`` through the apply step;
+        ``options`` are ``ApplyStep``'s (mode, fold policy, maintainers,
+        audit, ...).
+
+        ``pipeline_depth`` > 1 (MOR only) overlaps micro-batches the way a
+        streaming engine does: up to that many batches' wide Spark jobs are
+        in flight at once (distinct MOR layers are write-independent), while
+        snapshot COMMITS stay strictly in batch order — so exactly-once
+        fencing and the checkpoint contract are unchanged. This fills the
+        scheduler gaps between jobs (driver-side planning, commit fsyncs)
+        with the next batch's executor work."""
+        if pipeline_depth > 1 and options.get("mode", "cow") != "mor":
+            raise ValueError("pipeline_depth > 1 requires mode='mor' "
+                             "(COW batches read the previous batch's output)")
+        # an audit gate serializes commits by construction, so it is
+        # incompatible with pipelined staging
+        if options.get("audit") is not None and pipeline_depth > 1:
+            raise ValueError("audit gating requires pipeline_depth=1 "
+                             "(publish/abort must interleave with commits)")
+        super().__init__(spark, table_root, n_buckets, **options)
+        self.log_dir = log_dir
+        self.pipeline_depth = pipeline_depth
+        self.registry = SchemaRegistry()
+
+    def pending(self) -> list[int]:
+        return pending_batches(self.spark, self.log_dir, self.table)
+
+    def run(self, max_batches: int | None = None) -> RunResult:
+        if self.async_lineage and self._lineage_pool is None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            self._lineage_pool = _TrackedPool(ThreadPoolExecutor(
+                max_workers=1, thread_name_prefix="lineage"
+            ))
+        schema_of = dict(planned_batches(self.log_dir))
+        result = RunResult()
+        self._run_pipelined(schema_of, result, max_batches)
+        self.drain_maintenance()
+        self.drain_derived()
+        if self._lineage_pool is not None:
+            self._lineage_pool.drain()
+            self._lineage_pool = None
+        return result
+
+    def _run_pipelined(
+        self, schema_of: dict[int, int], result: RunResult,
+        max_batches: int | None,
+    ) -> None:
+        """The batch loop, with up to ``pipeline_depth`` batches staged
+        ahead of the commit head. At depth 1 staging runs inline on this
+        thread. Deeper, staging (read -> align -> reduce -> layer write)
+        fans out on a thread pool — Spark job submission is thread-safe
+        and the staged layers land in distinct uncommitted dirs — while
+        this thread commits strictly in batch order, preserving the
+        snapshot chain. ``max_batches`` caps applied plus in-flight
+        batches, so a batch that is skipped or rejected does not count."""
+        from collections import deque
+        from concurrent.futures import ThreadPoolExecutor
+
+        pool = (ThreadPoolExecutor(max_workers=self.pipeline_depth,
+                                   thread_name_prefix="mor-stage")
+                if self.pipeline_depth > 1 else None)
+
+        def _stage(batch_id: int) -> Any:
+            if pool is not None:
+                # one scheduler pool per pipeline slot: with FAIR mode (set
+                # in session.py) the in-flight batches' jobs share executor
+                # slots instead of queueing FIFO — batch k+1's map stage
+                # runs inside batch k's reduce stragglers and commit gaps
+                self.spark.sparkContext.setLocalProperty(
+                    "spark.scheduler.pool",
+                    f"stage-{batch_id % self.pipeline_depth}")
+            changes = read_batch(self.spark, self.log_dir, batch_id,
+                                 schema_of[batch_id], self.registry)
+            return self.stage(batch_id, changes)
+
+        def _commit_head() -> None:
+            batch_id, staged = window.popleft()
+            # staged() re-raises staging failures in batch order
+            self.commit(batch_id, staged(), result)
+
+        window: deque = deque()
+        try:
+            for batch_id in self.pending():
+                if (max_batches is not None and len(result.batches_applied)
+                        + len(window) >= max_batches):
+                    break
+                if pool is None:
+                    staged = _stage(batch_id)
+                    window.append((batch_id, lambda s=staged: s))
+                else:
+                    window.append((batch_id,
+                                   pool.submit(_stage, batch_id).result))
+                if len(window) >= self.pipeline_depth:
+                    _commit_head()
+            while window:
+                _commit_head()
+        finally:
+            if pool is not None:
+                pool.shutdown(wait=True)
+
     def read_quarantine(self, batch_id: int | None = None) -> DataFrame:
         """Quarantined (invalid) raw events, with the ``batch_id`` they
         arrived in — the read half of the reference's error-log -> fix ->
@@ -695,6 +731,13 @@ class CdcRunner:
 
         return reconcile_lineage(self.spark, self.table, self.lineage_dir)
 
+    def _dml(self, fn: Any, *args: Any, **kwargs: Any) -> Any:
+        """Run a ``merge`` DML planner against this runner's table with
+        its mode, lineage and merge plan, under ``_retry_commit``."""
+        return self._retry_commit(lambda: fn(
+            self.spark, self.table, *args, mode=self.mode,
+            lineage_dir=self.lineage_dir, **self._plan_kw, **kwargs))
+
     def delete_where(self, predicate: Any,
                      batch_id: int | None = None) -> dict[str, Any] | None:
         """Predicate delete against this runner's table, riding the runner's
@@ -704,13 +747,7 @@ class CdcRunner:
         erase half, completed by ``expire_snapshots`` + orphan GC)."""
         from .merge import delete_where
 
-        return self._retry_commit(lambda: delete_where(
-            self.spark, self.table, predicate, mode=self.mode,
-            batch_id=batch_id, lineage_dir=self.lineage_dir,
-            salted=self.salted, n_salts=self.n_salts, plan=self.plan,
-            shuffle_salts=self.shuffle_salts,
-            max_records_per_file=self.max_records_per_file,
-        ))
+        return self._dml(delete_where, predicate, batch_id=batch_id)
 
     def update_where(self, predicate: Any, assignments: dict[str, Any],
                      batch_id: int | None = None) -> dict[str, Any] | None:
@@ -718,13 +755,8 @@ class CdcRunner:
         configured merge plan and lineage — see ``merge.update_where``."""
         from .merge import update_where
 
-        return self._retry_commit(lambda: update_where(
-            self.spark, self.table, predicate, assignments, mode=self.mode,
-            batch_id=batch_id, lineage_dir=self.lineage_dir,
-            salted=self.salted, n_salts=self.n_salts, plan=self.plan,
-            shuffle_salts=self.shuffle_salts,
-            max_records_per_file=self.max_records_per_file,
-        ))
+        return self._dml(update_where, predicate, assignments,
+                         batch_id=batch_id)
 
     def merge_into(self, source: DataFrame,
                    matched_update: dict[str, Any] | str | None = "source",
@@ -740,20 +772,13 @@ class CdcRunner:
         join plan."""
         from .merge import merge_into
 
-        return self._retry_commit(lambda: merge_into(
-            self.spark, self.table, source,
-            matched_update=matched_update,
+        return self._dml(
+            merge_into, source, matched_update=matched_update,
             matched_update_condition=matched_update_condition,
             matched_delete_condition=matched_delete_condition,
             insert_unmatched=insert_unmatched,
-            insert_condition=insert_condition,
-            mode=self.mode, batch_id=batch_id,
-            lineage_dir=self.lineage_dir,
-            salted=self.salted, n_salts=self.n_salts, plan=self.plan,
-            shuffle_salts=self.shuffle_salts,
-            max_records_per_file=self.max_records_per_file,
-            prune_buckets=prune_buckets,
-        ))
+            insert_condition=insert_condition, batch_id=batch_id,
+            prune_buckets=prune_buckets)
 
     def stage_next_batch(self) -> dict[str, Any] | None:
         """Stage (write-audit-publish) the next pending log batch WITHOUT
@@ -772,15 +797,7 @@ class CdcRunner:
         schema_of = dict(planned_batches(self.log_dir))
         changes = read_batch(self.spark, self.log_dir, batch_id,
                              schema_of[batch_id], self.registry)
-        apply_fn = merge_batch if self.mode == "cow" else mor_apply_batch
-        return apply_fn(
-            self.spark, self.table, changes, batch_id,
-            salted=self.salted, n_salts=self.n_salts,
-            plan=self.plan, shuffle_salts=self.shuffle_salts,
-            quarantine_dir=self.quarantine_dir,
-            max_records_per_file=self.max_records_per_file,
-            wap=True,
-        )
+        return self._commit(batch_id, self.stage(batch_id, changes), wap=True)
 
     def final_state(self) -> DataFrame:
         """Live table ordered by the pass-gate stable ordering."""

@@ -3,9 +3,10 @@
 The batch runner (cdc/runner.py) is the deterministic, testable loop the
 reference's SLURM chain maps to; this module is the continuous variant: a
 ``readStream`` file source tails the change-log directory (one stream per
-schema epoch, unioned after alignment) and ``foreachBatch`` funnels every
-micro-batch through the exact same LWW-reduce -> merge -> snapshot-commit
-machinery, so both entry points share one correctness story.
+schema epoch, unioned after alignment) and ``foreachBatch`` hands every
+micro-batch to the runner's own ``ApplyStep`` — the same stage -> commit
+-> post-commit hooks (lineage, maintainers, the per-bucket fold policy)
+— so both entry points share one correctness story and one fold policy.
 
 Exactly-once: Structured Streaming's own checkpoint guarantees each file is
 delivered in exactly one micro-batch with a stable ``batch_id`` (epoch id);
@@ -27,7 +28,11 @@ from functools import reduce as _reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..cdc.merge import compact, merge_batch, mor_apply_batch
+# ``compact`` and ``mor_apply_batch`` are not called here (the apply step
+# owns both); they stay importable from this module because
+# perfbench/run.py wraps them here by name
+from ..cdc.merge import compact, mor_apply_batch  # noqa: F401
+from ..cdc.runner import ApplyStep
 from ..cdc.schema import SchemaRegistry, align_to_target
 from ..cdc.table import CowTable
 
@@ -50,6 +55,17 @@ def _epoch_streams(
     return streams
 
 
+def _start_foreach(events: DataFrame, body, checkpoint_dir: str,
+                   available_now: bool):
+    """Start ``events`` into a checkpointed ``foreachBatch(body)``."""
+    writer = (events.writeStream.foreachBatch(body)
+              .option("checkpointLocation", checkpoint_dir)
+              .outputMode("append"))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_apply(
     spark: SparkSession,
     log_dir: str,
@@ -69,9 +85,13 @@ def stream_apply(
     the log and stops — deterministic and testable; with False it runs
     until ``query.stop()``. Returns the streaming query handle.
 
+    Each epoch commits under ``STREAM_BATCH_BASE + epoch_id`` through
+    ``ApplyStep``, so it folds exactly as ``CdcRunner`` does: a bucket's
+    layers fold once that bucket holds ``compact_every`` of them.
+
     ``maintain``: derived-table maintainers (objects with
     ``refresh(spark, table)`` or bare callables — the CdcRunner contract)
-    refreshed inline every ``maintain_every``-th epoch inside
+    refreshed inline every ``maintain_every``-th applied epoch inside
     ``foreachBatch`` (epochs serialize, so the stores' single-writer
     discipline holds). A cadence > 1 can leave the stores short of head
     when the stream drains mid-cycle; run one explicit refresh after
@@ -79,56 +99,16 @@ def stream_apply(
     cursor-fenced no-ops when already there).
     """
     registry = SchemaRegistry()
-    table = CowTable(table_root, n_buckets=n_buckets)
-    table.create()
+    step = ApplyStep(spark, table_root, n_buckets=n_buckets, mode=mode,
+                     compact_every=compact_every, maintain=maintain,
+                     maintain_every=maintain_every)
     streams = _epoch_streams(spark, log_dir, registry, max_files_per_trigger)
     if not streams:
         raise ValueError(f"no schema_id=* dirs under {log_dir}")
     unioned = _reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), streams)
-    return _start_apply_stream(spark, unioned, table, table_root, mode,
-                               compact_every, maintain, maintain_every,
-                               checkpoint_dir, available_now)
-
-
-def _start_apply_stream(
-    spark: SparkSession, events: DataFrame, table: CowTable,
-    table_root: str, mode: str, compact_every: int,
-    maintain: list | None, maintain_every: int,
-    checkpoint_dir: str, available_now: bool,
-):
-    """Shared tail of every apply-shaped stream: foreachBatch funnels each
-    epoch through the batch merge with a fenced id, inline compaction at
-    the layer threshold, and optional in-loop derived maintenance."""
-    apply_fn = merge_batch if mode == "cow" else mor_apply_batch
-
-    epochs_seen = {"n": 0}
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_fn(
-            spark,
-            table,
-            batch_df,
-            batch_id=STREAM_BATCH_BASE + epoch_id,
-            lineage_dir=os.path.join(table_root, "_lineage"),
-            quarantine_dir=os.path.join(table_root, "_quarantine"),
-        )
-        if mode == "mor" and table.max_delta_layers() >= compact_every:
-            compact(spark, table)
-        if maintain:
-            epochs_seen["n"] += 1
-            if epochs_seen["n"] % max(maintain_every, 1) == 0:
-                for m in maintain:
-                    fn = m.refresh if hasattr(m, "refresh") else m
-                    fn(spark, table)
-
-    writer = (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach(
+        unioned, lambda df, epoch_id: step.apply(STREAM_BATCH_BASE + epoch_id, df),
+        checkpoint_dir, available_now)
 
 
 def stream_apply_debezium(
@@ -146,7 +126,7 @@ def stream_apply_debezium(
     txn_aware: bool = False,
 ):
     """Tail a directory of Debezium-envelope NDJSON files as a stream and
-    apply micro-batches through the same merge machinery as
+    apply micro-batches through the same ``ApplyStep`` as
     ``stream_apply`` — the topology a Kafka+Debezium deployment runs,
     with the file source standing in for the Kafka reader (swap in
     ``format("kafka")`` and ``col("value").cast("string")``; the parse
@@ -161,19 +141,25 @@ def stream_apply_debezium(
     no-op.
 
     ``txn_aware=True`` adds atomic transaction visibility (the batch
-    appliers' ``ingest_debezium_txn`` semantics on the stream): each
-    epoch splits (its events + carried-over pending) by Debezium
-    transaction completeness, applies only complete transactions, and
-    publishes the new pending state as ``pending-<epoch>`` AFTER the
-    fenced apply. The carry-over for epoch e reads the newest pending
-    with id < e, so a replayed epoch (crash after pending publish but
-    before the stream checkpoint advanced) re-reads its ORIGINAL input
-    state and replays into a fenced no-op — determinism again, across
-    epochs this time."""
-    from ..cdc.envelope import parse_debezium
+    appliers' ``ingest_debezium_txn`` semantics on the stream, through
+    the same ``envelope.apply_txn_batch``): each epoch splits (its events
+    + carried-over pending) by Debezium transaction completeness, applies
+    only complete transactions, and publishes the new pending state to
+    the ``PendingStore`` under ``<table_root>/_txn_pending`` AFTER the
+    fenced apply, keyed by the epoch's commit id. The carry-over for an
+    epoch reads the newest pending state below its id, so a replayed
+    epoch (crash after pending publish but before the stream checkpoint
+    advanced) re-reads its ORIGINAL input state and replays into a
+    fenced no-op — determinism again, across epochs this time. The store
+    keeps the newest two states: only the last uncheckpointed epoch can
+    replay."""
+    from ..cdc.envelope import PendingStore, apply_txn_batch, parse_debezium
 
-    table = CowTable(table_root, n_buckets=n_buckets)
-    table.create()
+    if txn_aware and mode != "mor":
+        raise ValueError("txn_aware streaming apply requires mode='mor'")
+    step = ApplyStep(spark, table_root, n_buckets=n_buckets, mode=mode,
+                     compact_every=compact_every, maintain=maintain,
+                     maintain_every=maintain_every)
     reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -181,79 +167,15 @@ def stream_apply_debezium(
     events = parse_debezium(lines, value_col="value",
                             with_transaction=txn_aware)
     if not txn_aware:
-        return _start_apply_stream(spark, events, table, table_root, mode,
-                                   compact_every, maintain, maintain_every,
-                                   checkpoint_dir, available_now)
+        def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+            step.apply(STREAM_BATCH_BASE + epoch_id, batch_df)
+    else:
+        store = PendingStore(spark, os.path.join(table_root, "_txn_pending"))
 
-    if mode != "mor":
-        raise ValueError("txn_aware streaming apply requires mode='mor'")
-
-    from ..cdc.envelope import pending_txn_schema, txn_split
-    from ..cdc.merge import compact as _compact
-    from ..cdc.merge import mor_apply_batch
-
-    state_dir = os.path.join(table_root, "_txn_pending")
-    os.makedirs(state_dir, exist_ok=True)
-    schema = pending_txn_schema()
-    epochs_seen = {"n": 0}
-
-    def _pending_before(epoch: int):
-        done = sorted(
-            int(d.split("-")[1]) for d in os.listdir(state_dir)
-            if d.startswith("pending-") and "." not in d
-            and os.path.exists(os.path.join(state_dir, d, "_DONE")))
-        prior = [e for e in done if e < epoch]
-        if not prior:
-            return None
-        return spark.read.schema(schema).parquet(
-            os.path.join(state_dir, f"pending-{prior[-1]:05d}"))
-
-    def _apply(batch_df, epoch_id: int) -> None:
-        # persist: the split fans the epoch into four actions (see the
-        # batch applier) — without it each re-parses the stream batch
-        batch_df = batch_df.persist()
-        complete, incomplete = txn_split(batch_df,
-                                         _pending_before(epoch_id))
-        mor_apply_batch(
-            spark, table,
-            complete.drop("_txn_id", "_txn_order", "_txn_total"),
-            batch_id=STREAM_BATCH_BASE + epoch_id,
-            lineage_dir=os.path.join(table_root, "_lineage"),
-            quarantine_dir=os.path.join(table_root, "_quarantine"))
-        if table.max_delta_layers() >= compact_every:
-            _compact(spark, table)
-        # same in-loop derived maintenance as _start_apply_stream — the
-        # txn branch must not silently skip maintainers the caller passed
-        if maintain:
-            epochs_seen["n"] += 1
-            if epochs_seen["n"] % max(maintain_every, 1) == 0:
-                for m in maintain:
-                    fn = m.refresh if hasattr(m, "refresh") else m
-                    fn(spark, table)
-        stage = os.path.join(state_dir, f"pending-{epoch_id:05d}.stage")
-        incomplete.write.mode("overwrite").parquet(stage)
-        with open(os.path.join(stage, "_DONE"), "w") as fh:
-            fh.write("ok")
-        final = os.path.join(state_dir, f"pending-{epoch_id:05d}")
-        import shutil as _sh
-        if os.path.isdir(final):
-            _sh.rmtree(final, ignore_errors=True)
-        os.rename(stage, final)
-        # prune beyond the two newest: only the LAST uncheckpointed epoch
-        # can replay, and it reads the newest pending strictly below it
-        done = sorted(
-            d for d in os.listdir(state_dir)
-            if d.startswith("pending-") and "." not in d)
-        for d in done[:-2]:
-            _sh.rmtree(os.path.join(state_dir, d), ignore_errors=True)
-        batch_df.unpersist()
-
-    writer = (events.writeStream.foreachBatch(_apply)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+            apply_txn_batch(step, store, STREAM_BATCH_BASE + epoch_id,
+                            batch_df)
+    return _start_foreach(events, _apply, checkpoint_dir, available_now)
 
 
 def stream_merge(
@@ -326,14 +248,8 @@ def stream_merge(
             mode=mode, batch_id=batch_id_base + epoch_id,
         )
 
-    writer = (
-        source_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach(source_stream, _merge, checkpoint_dir,
+                          available_now)
 
 
 def stream_windowed_counts(

@@ -564,6 +564,76 @@ def test_txn_split_null_order_dialect_falls_back_to_count(spark):
     assert c2.count() == 2 and i2.count() == 0
 
 
+def _txn_frame(spark, lines):
+    from biomedica_etl_spark.cdc.envelope import parse_debezium
+
+    return parse_debezium(
+        spark.createDataFrame([(ln,) for ln in lines], "value string"),
+        with_transaction=True)
+
+
+def test_txn_split_unknown_total_waits_in_pending(spark):
+    """Debezium's own data events carry the transaction id and position
+    but no event_count: with the total unknown the transaction can never
+    be declared complete, so its events must wait in the incomplete side
+    — not vanish from both sides."""
+    from biomedica_etl_spark.cdc.envelope import txn_split
+
+    def env_no_count(conv, turn, lsn, order):
+        d = json.loads(_txn_env(conv, turn, lsn, txn="U", order=order))
+        d["transaction"].pop("event_count")
+        return json.dumps(d)
+
+    ev = _txn_frame(spark, [env_no_count("u", 0, 30, 1),
+                            env_no_count("u", 1, 31, 2),
+                            _txn_env("bare", 0, 32)])
+    complete, incomplete = txn_split(ev, None)
+    assert [(r.conv_id, r.turn_idx) for r in complete.collect()] == [
+        ("bare", 0)]
+    assert sorted((r.conv_id, r.turn_idx) for r in incomplete.collect()) == [
+        ("u", 0), ("u", 1)]
+
+
+def test_txn_split_mixed_null_order_completes_when_all_arrive(spark):
+    """A transaction whose events carry total_order on some events and
+    not on others completes once every event has arrived: a null
+    position counts as its own event, a known one counts once."""
+    from biomedica_etl_spark.cdc.envelope import txn_split
+
+    no_order = json.loads(_txn_env("m", 1, 41, txn="M", total=2))
+    no_order["transaction"].pop("total_order")
+    first = _txn_frame(spark, [_txn_env("m", 0, 40, txn="M", total=2,
+                                        order=1)])
+    c1, i1 = txn_split(first, None)
+    assert c1.count() == 0 and i1.count() == 1
+    c2, i2 = txn_split(_txn_frame(spark, [json.dumps(no_order)]), i1)
+    assert sorted((r.conv_id, r.turn_idx) for r in c2.collect()) == [
+        ("m", 0), ("m", 1)]
+    assert i2.count() == 0
+
+
+def test_pending_store_orders_ids_as_integers(spark, tmp_path):
+    """Pending ids cross a digit boundary (99_999 -> 100_000): the store
+    must order them as integers, keep the newest two and serve the newest
+    state — a name-ordered prune would delete it instead."""
+    from biomedica_etl_spark.cdc.envelope import (PendingStore,
+                                                  pending_txn_schema)
+
+    store = PendingStore(spark, str(tmp_path / "pending"))
+    schema = pending_txn_schema()
+    for bid in (99_998, 99_999, 100_000):
+        row = {f.name: None for f in schema.fields}
+        row.update(conv_id=f"c{bid}", turn_idx=0, lsn=bid, op="I",
+                   _txn_id=f"t{bid}")
+        store.publish(bid, spark.createDataFrame([row], schema))
+    assert [r.conv_id for r in store.newest().collect()] == ["c100000"]
+    assert [r.conv_id for r in store.read_before(100_000).collect()] == [
+        "c99999"]
+    assert store.read_before(99_999) is None  # pruned: only two kept
+    assert store.published_from(100_000)
+    assert not store.published_from(100_001)
+
+
 def test_txn_ingest_survives_processed_file_archival(spark, tmp_path):
     """Operational archival: files already applied are REMOVED from the
     ndjson dir between runs. Pending state is keyed by batch_id (the
@@ -618,9 +688,11 @@ def test_envelopes_with_txn_renderer_tears_and_converges(spark, dbz_env):
     transactions (deferral actually exercised: some batch leaves a
     non-empty pending), and after the full directory both the plain and
     the txn-aware appliers converge to the replay oracle."""
+    import shutil
     import tempfile
 
-    from biomedica_etl_spark.cdc.envelope import (envelopes_with_txn,
+    from biomedica_etl_spark.cdc.envelope import (PendingStore,
+                                                  envelopes_with_txn,
                                                   ingest_debezium,
                                                   ingest_debezium_txn)
     from biomedica_etl_spark.cdc.runner import read_log_events
@@ -633,21 +705,27 @@ def test_envelopes_with_txn_renderer_tears_and_converges(spark, dbz_env):
         4, "lsn").select("value").write.text(ndj)
 
     plain = ingest_debezium(spark, ndj, os.path.join(d, "a"), n_buckets=4)
-    txn = ingest_debezium_txn(spark, ndj, os.path.join(d, "b"), n_buckets=4)
+    # the txn-aware applier takes the directory one file at a time (each
+    # call resumes past the files already applied), so the newest pending
+    # state can be read after every file, before the store prunes it
+    inc = os.path.join(d, "inc")
+    os.makedirs(inc)
+    store = PendingStore(spark, os.path.join(d, "b", "_txn_pending"))
+    pending_rows = []
+    for f in sorted(f for f in os.listdir(ndj) if f.startswith("part-")):
+        shutil.copy(os.path.join(ndj, f), inc)
+        txn = ingest_debezium_txn(spark, inc, os.path.join(d, "b"),
+                                  n_buckets=4)
+        pending_rows.append(store.newest().count())
     want = replay(log)
     assert _live_rows(spark, plain) == want
     assert _live_rows(spark, txn) == want
-    # deferral really happened: at least one non-final pending dir holds
-    # carried-over events (a transaction torn at a file boundary)
-    state = os.path.join(d, "b", "_txn_pending")
-    pend_dirs = sorted(p for p in os.listdir(state)
-                       if p.startswith("pending-") and "." not in p)
-    nonfinal = [spark.read.parquet(os.path.join(state, p)).count()
-                for p in pend_dirs[:-1]]
-    assert any(n > 0 for n in nonfinal)
-    # and the FINAL pending is empty — nothing lost
-    assert spark.read.parquet(
-        os.path.join(state, pend_dirs[-1])).count() == 0
+    assert len(pending_rows) == 4
+    # deferral really happened: some non-final batch left carried-over
+    # events (a transaction torn at a file boundary) ...
+    assert any(n > 0 for n in pending_rows[:-1]), pending_rows
+    # ... and the FINAL pending is empty — nothing lost
+    assert pending_rows[-1] == 0
 
 
 def test_relay_coalesces_small_windows_bounded_files_identical_replica(

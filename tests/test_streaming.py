@@ -330,3 +330,45 @@ def test_stream_apply_with_maintained_index(spark, tmp_path):
         (r["token"], r["conv_id"], r["turn_idx"], r["tf"])
         for r in idx.read(spark).collect())
     assert got == scratch
+
+
+def test_stream_apply_folds_like_runner(spark, tmp_path):
+    """One fold policy across paths: the same log drained by CdcRunner
+    (MOR, depth 1) and by stream_apply (one batch file per epoch) with
+    the same n_buckets and compact_every ends with identical per-bucket
+    layer counts. The sparse log leaves some bucket out of some batch,
+    so folding every bucket at the threshold (instead of only the
+    buckets at it) would leave different counts."""
+    import glob
+    import os
+
+    from biomedica_etl_spark.cdc.runner import CdcRunner
+
+    log = str(tmp_path / "log")
+    generate_change_log(log, GeneratorConfig(
+        n_events=140, batch_size=20, n_convs=10, schema_epoch_starts=(0.0,)))
+    # one parquet file per batch, timestamped in batch order, so each
+    # stream epoch is exactly one log batch
+    files = sorted(glob.glob(os.path.join(log, "schema_id=0", "batch_id=*",
+                                          "*.parquet")),
+                   key=lambda f: int(f.split("batch_id=")[1].split("/")[0]))
+    assert len(files) == 7
+    for i, f in enumerate(files):
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))
+
+    def layers(table):
+        deltas = table.current_snapshot().get("delta_dirs", {})
+        return [len(deltas.get(str(b), [])) for b in range(8)]
+
+    runner = CdcRunner(spark, log, str(tmp_path / "r"), n_buckets=8,
+                       mode="mor", compact_every=2)
+    runner.run()
+    q = stream_apply(spark, log, str(tmp_path / "s"), str(tmp_path / "ckpt"),
+                     n_buckets=8, mode="mor", compact_every=2,
+                     max_files_per_trigger=1)
+    assert q.awaitTermination(300), "stream did not drain in time"
+    streamed = CowTable(str(tmp_path / "s"))
+    assert len([s for s in streamed.snapshots()
+                if s.get("batch_id") is not None]) == 7
+    assert any(layers(runner.table)), "no bucket kept a layer past a fold"
+    assert layers(streamed) == layers(runner.table)
